@@ -558,9 +558,23 @@ object PipelineQueries {
     * grams: a gram-less source sets no mask bit, so it falls out of the
     * per-source aggregate below exactly as it fell out of the old
     * distinct-grams frame — the emitted pair matrix is identical. */
-  private def overlapSources(spark: SparkSession, dir: String): Array[String] =
-    graft.sources.Tokens.table(spark, dir).select(col("source")).distinct()
+  private def overlapSources(spark: SparkSession, dir: String): Array[String] = {
+    val sources = graft.sources.Tokens.table(spark, dir).select(col("source")).distinct()
       .collect().map(_.getString(0)).sorted
+    requirePackableSources(sources.length)
+    sources
+  }
+
+  /** Source-count cap of the overlap pair packing: [[MaskPairsUdf]] packs
+    * bit indices (a, b) as a*65536 + b, injective only while every index
+    * fits in 16 bits. */
+  private[graft] val MaxOverlapSources = 65536
+
+  /** Fails loudly above [[MaxOverlapSources]] instead of emitting
+    * colliding pair keys. */
+  private[graft] def requirePackableSources(n: Int): Unit =
+    require(n <= MaxOverlapSources,
+      s"source overlap packs source pairs as a*65536+b: $n sources exceed the cap of $MaxOverlapSources")
 
   /** Per-gram source-set bitmask aggregation over the RAW per-doc gram
     * rows. OPTIMIZATION r07 (guide §2.4): the old shape distinct-ed
@@ -587,7 +601,8 @@ object PipelineQueries {
 
   /** Packed (bit index a, bit index b) pairs of every two set bits across
     * the mask words — the per-gram "which source pairs share this gram"
-    * fan-out. Bit index = word*64 + bit; pack = a*65536 + b with a < b. */
+    * fan-out. Bit index = word*64 + bit; pack = a*65536 + b with a < b
+    * (the source count is capped by [[requirePackableSources]]). */
   private final class MaskPairsUdf extends (Array[Long] => Array[Long]) with Serializable {
     override def apply(words: Array[Long]): Array[Long] = {
       var total = 0

@@ -173,7 +173,7 @@ object SketchQueries {
         .head().getAs[Array[Byte]](0)
       GraftFunctions.register(spark)
       val probe = exploded(t).distinct()
-      // foldable-sketch native expression: deserialized once, probed in codegen
+      // constant-sketch native expression: deserialized once, probed in codegen
       val prefiltered = probe.where(GraftFunctions.bloomMightContain(lit(sketchBytes), col("token")))
       val result = prefiltered
         .join(buildSide, Seq("token"), "left_semi") // exact confirmation join

@@ -1049,6 +1049,27 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("BPE: the compiled merge table ships no construction-only map") {
+    import graft.operators.Bpe
+    // canonOf (product string -> id) is read only while the tables are
+    // built; a field of that type would ride every task closure
+    val mapFields = classOf[Bpe.CompiledMerges].getDeclaredFields
+      .filter(f => classOf[java.util.Map[_, _]].isAssignableFrom(f.getType))
+    assert(mapFields.isEmpty, s"map fields: ${mapFields.map(_.getName).mkString(", ")}")
+    val bytes = new java.io.ByteArrayOutputStream()
+    new java.io.ObjectOutputStream(bytes).writeObject(new Bpe.CompiledMerges(Bpe.FixtureMerges))
+    assert(!bytes.toString("ISO-8859-1").contains("java.util.HashMap"))
+  }
+
+  test("source overlap: the a*65536+b pair packing guard holds at its cap") {
+    PipelineQueries.requirePackableSources(PipelineQueries.MaxOverlapSources)
+    PipelineQueries.requirePackableSources(1)
+    val ex = intercept[IllegalArgumentException] {
+      PipelineQueries.requirePackableSources(PipelineQueries.MaxOverlapSources + 1)
+    }
+    assert(ex.getMessage.contains("65537 sources"), ex.getMessage)
+  }
+
   test("connected components: periodic checkpoint converges long-diameter chains leak-free") {
     import spark.implicits._
     // a 300-node chain needs ~9 pointer-jumping rounds; checkpointEvery=2

@@ -91,4 +91,25 @@ class BloomKeyedProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("probed/loaded as"),
       s"expected type-tag wording, got: ${e.getMessage.take(300)}")
   }
+
+  test("1 MiB pack: keyed probe plan text stays small and shows sketch[<n> B]") {
+    GraftFunctions.register(spark)
+    val bigCfg = BloomConfig(Keys.DefaultK0, Keys.DefaultK1, 3, 17)
+    val words = new Array[Long](bigCfg.l)
+    (1 to 999).foreach(t => graft.core.BlockedBloom.insertInt(words, bigCfg, t))
+    val filters = Seq(
+      "g" -> graft.core.BlockedBloom.toBytes(words, bigCfg, graft.core.BlockedBloom.TypeTag.Int),
+      "h" -> sketchOf(1 to 10))
+    val packBytes = BloomFilterPack.encode(filters).length
+    assert(packBytes >= (1 << 20))
+    val df = spark.range(1, 1000)
+      .select(lit("g").as("grp"), col("id").cast("int").as("token"))
+      .where(GraftFunctions.bloomMightContainKeyed(filters, col("grp"), col("token")))
+    assert(df.collect().length === 999, "no false negatives")
+    BloomMightContainSpec.planTexts(df).foreach { case (what, text) =>
+      assert(text.length < BloomMightContainSpec.PlanTextCap,
+        s"$what is ${text.length} chars with a $packBytes B pack:\n${text.take(2000)}")
+      assert(text.contains(s"sketch[$packBytes B]"), s"$what does not show the pack:\n$text")
+    }
+  }
 }
